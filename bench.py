@@ -287,7 +287,7 @@ def _compact_line(
     if sf1_spot and isinstance(sf1_spot.get("cache_builds"), dict):
         for n, v in sf1_spot["cache_builds"].items():
             if isinstance(v, dict) and isinstance(v.get("build_s"), list):
-                builds_1x[n] = v["build_s"][0]
+                builds_1x[n] = (v["build_s"] or [None])[0]
     if sf1_spot and isinstance(sf1_spot.get("stages"), dict):
         # Stage tables ride in bench_full.json; the size-bounded line
         # carries only the per-stage 10x/1x ratios.
@@ -322,14 +322,14 @@ def _compact_line(
         # skipped / n-a) and folds the "ok" rows into a count plus the
         # worst ok ratio.
         qd = sf1_spot["queries"]
-        ok = {
+        spot_ok = {
             n: v for n, v in qd.items()
             if isinstance(v, list) and len(v) == 3 and v[2] == "ok"
         }
         sf1_spot = dict(sf1_spot)
-        sf1_spot["queries"] = {n: v for n, v in qd.items() if n not in ok}
-        sf1_spot["n_ok"] = len(ok)
-        ok_ratios = [v[1] for v in ok.values() if v[1] is not None]
+        sf1_spot["queries"] = {n: v for n, v in qd.items() if n not in spot_ok}
+        sf1_spot["n_ok"] = len(spot_ok)
+        ok_ratios = [v[1] for v in spot_ok.values() if v[1] is not None]
         sf1_spot["ok_max_ratio"] = max(ok_ratios) if ok_ratios else None
     payload = {
         "metric": "suite_total_wall",

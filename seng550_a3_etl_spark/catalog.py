@@ -131,14 +131,6 @@ def load_tables(spark: SparkSession, sf_dir: str) -> Tables:
     return Tables(spark, sf_dir)
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> Tables:
-    """Load tables and register them as temp views for spark.sql use."""
-    tables = load_tables(spark, sf_dir)
-    for name, df in tables:
-        df.createOrReplaceTempView(name)
-    return tables
-
-
 def ensure_database(spark: SparkSession, name: str) -> bool:
     """Idempotent database bootstrap (SURVEY §2.1 S7 — the reference's
     create_database_if_not_exists + CREATE EXTENSION dance at

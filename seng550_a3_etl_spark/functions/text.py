@@ -58,11 +58,6 @@ def shingles(toks: Column, n: int) -> Column:
     )
 
 
-def token_count_regex(text: Column) -> Column:
-    """BPE-ish token count via the token regex (word pieces + punct)."""
-    return F.size(F.regexp_extract_all(text, F.lit(TOKEN_REGEX), F.lit(0)))
-
-
 def marker_count(toks: Column, lang: str) -> Column:
     """How many tokens (with multiplicity) are markers of ``lang``."""
     markers = F.array(*[F.lit(m) for m in LANG_MARKERS[lang]])

@@ -20,6 +20,8 @@ so even this iterative operator is fully oracle-checked.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -224,21 +226,16 @@ _FIXED_WIDTH_BYTES = {
 
 
 def _parse_byte_size(raw) -> int | None:
-    """Byte count for a Spark size-conf value: plain bytes or a
-    k/m/g/t(b) binary-unit suffix; None when unparseable."""
-    s = str(raw).strip().lower()
-    try:
-        return int(s)
-    except ValueError:
-        pass
-    units = {"k": 1024, "m": 1024**2, "g": 1024**3, "t": 1024**4}
-    s = s[:-1] if s.endswith("b") and len(s) > 1 else s
-    if s and s[-1] in units:
-        try:
-            return int(float(s[:-1]) * units[s[-1]])
-        except ValueError:
-            return None
-    return None
+    """Byte count for a Spark size-conf value: a number with an optional
+    k/m/g/t/p binary-unit suffix and an optional trailing ``b`` ("100",
+    "100b", "2m", "512kb"); None when unparseable."""
+    units = {"": 1, "k": 1024, "m": 1024**2, "g": 1024**3, "t": 1024**4,
+             "p": 1024**5}
+    m = re.fullmatch(r"(-?\d+(?:\.\d+)?)([kmgtp]?)b?", str(raw).strip().lower())
+    if m is None:
+        return None
+    scale = units[m[2]]
+    return int(float(m[1]) * scale) if "." in m[1] else int(m[1]) * scale
 
 
 def _broadcast_threshold_bytes(spark) -> int:

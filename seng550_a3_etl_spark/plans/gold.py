@@ -10,9 +10,9 @@ Reference physical design → Spark equivalent:
   a persisted gold DataFrame written with ``save_gold``.
 - denormalized fact table + incremental upsert
   (/root/reference/queries.py:94-161, etl.py:290-327) → ``build_facts``
-  + ``merge_upsert`` + overwrite (Delta MERGE would make this
-  transactional; the parquet path is idempotent via the strictly-newer
-  guard).
+  + ``refresh_gold_incremental``, which rewrites only the partitions a
+  batch touches (Delta MERGE would make it transactional; the parquet
+  path is idempotent via the strictly-newer guard).
 
 Scale: the fact side (incidents) is never broadcast and shuffles at most
 twice (spatial cell join if the polygon side is big — not here — and the
@@ -27,7 +27,10 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from seng550_a3_etl_spark.operators.dedup import latest_wins, merge_upsert
+from seng550_a3_etl_spark.operators.dedup import (
+    merge_upsert,
+    merge_upsert_partitioned,
+)
 from seng550_a3_etl_spark.operators.spatial import points_in_polygons_join
 
 
@@ -86,28 +89,39 @@ def refresh_gold_incremental(
     version_col: str,
     partition_by: Sequence[str] = (),
 ) -> DataFrame:
-    """Incremental fact refresh (/root/reference/etl.py:317-327): merge a
-    new batch into the persisted gold table under the strictly-newer
-    guard, rewrite, return the refreshed frame. Parquet requires the
-    rewrite staging through a temp path (no transactional MERGE);
-    with Delta this becomes a single MERGE INTO."""
-    current = spark.read.parquet(path)
-    merged = merge_upsert(current, new_batch, keys, version_col)
-    staging = path.rstrip("/") + "__staging"
-    save_gold(merged, staging, partition_by)
-    refreshed = spark.read.parquet(staging)
-    save_gold(refreshed, path, partition_by)
+    """Incremental fact refresh (/root/reference/etl.py:317-327): upsert a
+    new batch into the persisted gold table at ``path`` under the
+    strictly-newer guard and return the refreshed frame.
+
+    - One partition column: ``merge_upsert_partitioned`` reads, merges
+      and replaces only the partitions holding batch rows (a key's
+      partition value must never change); the others stay
+      byte-identical on disk. The swap is atomic per partition
+      directory, not globally — safe because the strictly-newer merge
+      converges when rerun after a partial failure.
+    - No partition column: the whole table is merged into a staging
+      copy, which then overwrites ``path``: Spark cannot overwrite a
+      path it is reading, and the stage keeps a durable copy of the
+      merged table should that overwrite fail.
+    - More than one partition column: ``ValueError``.
+
+    With Delta this becomes a single MERGE INTO."""
+    if len(partition_by) > 1:
+        raise ValueError(
+            f"refresh_gold_incremental supports at most one partition "
+            f"column, got {list(partition_by)}"
+        )
+    if partition_by:
+        merge_upsert_partitioned(
+            spark, path, new_batch, keys, version_col, partition_by[0]
+        )
+    else:
+        current = spark.read.parquet(path)
+        merged = merge_upsert(current, new_batch, keys, version_col)
+        staging = path.rstrip("/") + "__staging"
+        save_gold(merged, staging)
+        save_gold(spark.read.parquet(staging), path)
     return spark.read.parquet(path)
-
-
-def dedup_incidents(
-    incidents: DataFrame, keys: Sequence[str], modified_col: str, tiebreak: str
-) -> DataFrame:
-    """W1 pre-dedup of raw incidents before fact build
-    (/root/reference/queries.py:133,150)."""
-    return latest_wins(
-        incidents, keys, [F.desc(modified_col), F.desc(tiebreak)]
-    )
 
 
 def merge_aggregates(

@@ -8,7 +8,8 @@
   as a stream.
 - ``streaming_fact_upsert`` — the incremental fact refresh
   (/root/reference/etl.py:317-327) as foreachBatch: each micro-batch
-  merges into the parquet gold table under the strictly-newer guard.
+  merges into the parquet gold table through
+  ``plans.gold.refresh_gold_incremental`` (strictly-newer guard).
   foreachBatch is the right tool because the sink (parquet rewrite /
   Delta MERGE) is a batch operation; exactly-once comes from the guard's
   idempotence (re-processing a batch cannot regress a newer row).
@@ -25,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from seng550_a3_etl_spark.operators.dedup import merge_upsert
+from seng550_a3_etl_spark.plans.gold import refresh_gold_incremental
 
 
 def windowed_event_counts(
@@ -183,11 +184,7 @@ def streaming_fact_upsert(
     )
 
     def _merge(batch: DataFrame, _batch_id: int) -> None:
-        current = spark.read.parquet(target_path)
-        merged = merge_upsert(current, batch, keys, version_col)
-        staging = target_path.rstrip("/") + "__staging"
-        merged.write.mode("overwrite").parquet(staging)
-        spark.read.parquet(staging).write.mode("overwrite").parquet(target_path)
+        refresh_gold_incremental(spark, target_path, batch, keys, version_col)
 
     writer = (
         stream.writeStream.foreachBatch(_merge)

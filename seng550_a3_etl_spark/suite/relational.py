@@ -59,7 +59,7 @@ def nation_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("o_orderkey").alias("order_count"))
     )
     return (
-        F.broadcast(t.nation.select("n_nationkey", "n_name"))
+        t.nation.select("n_nationkey", "n_name")
         .join(
             cust_per_nation,
             F.col("n_nationkey") == cust_per_nation.c_nationkey,

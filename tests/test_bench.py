@@ -73,6 +73,19 @@ def test_compact_line_carries_cache_build_1x_seconds():
     }
 
 
+def test_compact_line_survives_empty_cache_build_list():
+    # A cache whose 1x build was never timed (empty build_s) must not
+    # cost the driver its compact line.
+    spot = dict(SPOT, cache_builds={
+        "shingle_sets_hashed": {"build_s": [], "verdict": "failed"},
+        "copurchase_gold": {"build_s": [0.8, 2.4, 3.0], "verdict": "ok"},
+    })
+    line = bench._compact_line(100.0, SUITE_TIMINGS, 0.1, {}, IDLE, spot)
+    assert json.loads(line)["cache_builds_1x"] == {
+        "shingle_sets_hashed": None, "copurchase_gold": 0.8,
+    }
+
+
 def test_compact_line_stubs_decorative_blocks_before_queries():
     # VERDICT r15 #1 core regression: with a fat retimed block and fat
     # spot diagnostics, the line must stub THOSE and keep >= the floor

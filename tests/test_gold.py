@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from seng550_a3_etl_spark.catalog import load_tables
@@ -73,6 +74,66 @@ def test_refresh_gold_incremental(spark, tmp_path):
         spark, path, batch, keys=["k"], version_col="ts", partition_by=["d"]
     )
     assert {r.k: r.v for r in again.collect()} == got
+
+
+def _partition_files(path):
+    """{partition dir: {file name: (mtime_ns, size)}} for a parquet table."""
+    return {
+        part.name: {
+            f.name: (f.stat().st_mtime_ns, f.stat().st_size)
+            for f in part.iterdir()
+        }
+        for part in path.iterdir()
+        if part.is_dir()
+    }
+
+
+def test_refresh_gold_incremental_rewrites_only_touched_partition(
+    spark, tmp_path
+):
+    schema = "k int, ts timestamp, v string, d string"
+    days = [f"2024-01-0{i}" for i in range(1, 6)]
+    path = tmp_path / "facts"
+    t0 = _ts("2024-01-01T10:00:00")
+    initial = spark.createDataFrame(
+        [(i, t0, f"t{i}", d) for i, d in enumerate(days)], schema
+    )
+    save_gold(initial, str(path), partition_by=["d"])
+    before = _partition_files(path)
+    assert len(before) == 5
+
+    batch = spark.createDataFrame(
+        [
+            (2, _ts("2024-01-01T11:00:00"), "s2", days[2]),  # fresher
+            (9, _ts("2024-01-01T08:00:00"), "s9", days[2]),  # new
+        ],
+        schema,
+    )
+    refreshed = refresh_gold_incremental(
+        spark, str(path), batch, ["k"], "ts", ["d"]
+    )
+    got = {r.k: r.v for r in refreshed.collect()}
+    assert got == {0: "t0", 1: "t1", 2: "s2", 3: "t3", 4: "t4", 9: "s9"}
+
+    after = _partition_files(path)
+    touched = f"d={days[2]}"
+    assert after[touched] != before[touched]
+    for part in before.keys() - {touched}:
+        assert after[part] == before[part], part
+    assert not list(tmp_path.glob("*__staging"))
+
+
+def test_refresh_gold_incremental_rejects_two_partition_columns(
+    spark, tmp_path
+):
+    df = spark.createDataFrame(
+        [(1, _ts("2024-01-01T10:00:00"), "a", "x")],
+        "k int, ts timestamp, d string, r string",
+    )
+    with pytest.raises(ValueError, match="at most one partition column"):
+        refresh_gold_incremental(
+            spark, str(tmp_path / "facts"), df, ["k"], "ts", ["d", "r"]
+        )
 
 
 def test_catalog_ddl_idempotent(spark, tmp_path):

@@ -1157,6 +1157,7 @@ def test_broadcast_threshold_parses_unit_suffixes(spark):
         ("1048576", 1048576), ("-1", -1), ("10k", 10 * 1024),
         ("2m", 2 * 1024**2), ("1g", 1024**3), ("512kb", 512 * 1024),
         ("banana", None), ("", None), ("b", None),
+        ("100b", 100), ("1p", 1024**5),
     ]:
         assert _parse_byte_size(raw) == want, raw
     # end to end through the session conf (Spark validates on set, so
